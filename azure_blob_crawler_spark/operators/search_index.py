@@ -95,6 +95,13 @@ class TextSearchIndex:
             "chunk_id", F.size("__ts").alias("doc_len"), F.lit(gen).alias("gen"),
             self._tb_mask_expr().alias("tb_mask"),
         ).persist()
+        try:
+            return self._write_delta(prev, gen, toks, doc_rows)
+        finally:
+            doc_rows.unpersist()
+            toks.unpersist()
+
+    def _write_delta(self, prev: dict, gen: int, toks: DataFrame, doc_rows: DataFrame) -> dict:
         delta_n, delta_sum = self._agg_len(doc_rows)
 
         post_rows = (
@@ -115,8 +122,6 @@ class TextSearchIndex:
                 self.postings, post_rows, key=["term", "chunk_id"],
                 n_buckets=self.n_term_buckets, bucket_by="term",
             )
-            doc_rows.unpersist()
-            toks.unpersist()
             return self.store.summary(self.docs)
 
         # replaced chunks' old lengths + term-bucket masks, via a
@@ -141,10 +146,7 @@ class TextSearchIndex:
             ),
         }
         self.store.merge(self.postings, post_rows)
-        out = self.store.merge(self.docs, doc_rows, summary=summary)
-        doc_rows.unpersist()
-        toks.unpersist()
-        return out
+        return self.store.merge(self.docs, doc_rows, summary=summary)
 
     def rebuild(
         self, chunks: DataFrame, id_col: str = "chunk_id", content_col: str = "content"

@@ -1,4 +1,11 @@
-"""Scale-adaptive input parallelism for compute-heavy operators.
+"""Driver- and input-side parallelism: ``run_all`` runs independent Spark
+jobs concurrently from one driver; ``fan_out`` widens under-partitioned
+input for compute-heavy operators.
+
+``run_all`` relies on Spark's scheduling within an application: jobs
+submitted from separate driver threads run at the same time and share the
+executors' task slots, so a short job no longer waits for an unrelated long
+one, and a job of few tasks leaves its idle slots to the others.
 
 A single parquet file written as one row group scans as ONE task no matter
 how many cores the cluster has (row groups are the unit of split
@@ -20,7 +27,58 @@ aggregations whose oracle comparison depends on a stable summation order.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import logging
+import threading
+import time
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
+
+_log = logging.getLogger(__name__)
+
+
+def run_all(
+    spark: SparkSession, branches: dict[str, Callable[[], object]], wall_s: dict[str, float]
+) -> dict[str, object]:
+    """Run every branch on its own driver thread and wait for all of them.
+
+    Returns each branch's result by name and writes its wall seconds into
+    ``wall_s`` (a branch that starts branches of its own includes their
+    time). Each thread inherits the caller's Spark local properties (job
+    group, scheduler pool) as they are at this call.
+
+    When branches fail, every branch still runs to its end; each failure is
+    logged with the branch's name, then the first one raised is re-raised
+    here, so the caller never proceeds past a half-finished set."""
+    results: dict[str, object] = {}
+    errors: list[BaseException] = []
+
+    def run(name: str, fn: Callable[[], object]) -> None:
+        t0 = time.perf_counter()
+        try:
+            results[name] = fn()
+        except BaseException as e:  # re-raised by the joining thread below
+            _log.warning("branch %r failed", name, exc_info=True)
+            errors.append(e)
+        finally:
+            wall_s[name] = round(time.perf_counter() - t0, 3)
+
+    # one wrap per thread: each gets its own copy of the local properties,
+    # so a branch that sets its job group does not set it for its siblings
+    threads = [
+        threading.Thread(
+            target=inheritable_thread_target(spark)(run), args=(name, fn), name=f"branch-{name}"
+        )
+        for name, fn in branches.items()
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+    return results
 
 
 # fanning a delta below this many rows per target partition costs more in

@@ -1,12 +1,43 @@
 """CrawlRunner — iterated BSP crawl rounds over SnapshotStore tables.
 
 One round = the engine equivalent of the reference's full message lifecycle
-(SURVEY.md §3.1: receive → extract → chunk → embed → upload → complete):
+(SURVEY.md §3.1: receive → extract → chunk → embed → upload → complete).
+The reference overlaps that work across messages with asyncio semaphores;
+here one round runs as a fixed DAG of branches, each branch a driver thread
+submitting its own Spark jobs (``parallel.run_all``), so independent jobs
+share the executors' slots instead of queueing behind one another:
 
-  claim (scheduler) → mark in_flight → fetch (deterministic simulator UDF)
-  → admission → span extraction → chunking → embedding → MERGE chunks +
-  doc_meta → link extraction → canonicalize → seen-set dedup (bloom + exact
-  anti-join) → MERGE frontier (done states + discovered links) → commit
+  claim (scheduler: frontier read, salt widths, claim, count)
+   ├─ lock: frontier pending → in_flight MERGE
+   ├─ claim_log MERGE (ordering-oracle surface)
+   └─ fetch: fetch (deterministic simulator UDF) → admission → span
+      extraction → ``docs``, materialized once, then
+       ├─ pipeline: chunk → embed → count, then
+       │   ├─ chunks MERGE
+       │   ├─ index: BM25 postings + doc stats upsert
+       │   └─ doc_meta MERGE
+       ├─ discovery: link extraction → batch dedup → seen-set filter
+       │  (cuckoo probe + exact anti-join) → global discovery_seq →
+       │  cuckoo insert/rebuild → seen_cuckoo MERGE
+       └─ counts: the fetch-outcome aggregate
+  ═ barrier (every branch joined) ═
+  frontier commit: done states + discovered links + round metrics
+
+Invariants the DAG keeps:
+
+1. One writer per table: no two branches write the same table, and the
+   lock (a frontier write) finishes before the frontier commit; the store
+   also enforces this with a per-table lock.
+2. The seen_cuckoo commit precedes the frontier commit, so cuckoo ⊇
+   frontier holds after a crash between the two.
+3. Every branch commit precedes the frontier commit, so a crash anywhere
+   leaves the round uncommitted and the next run replays it.
+4. When a branch fails, every branch still runs to its end, the first
+   error is re-raised, the frontier commit does not run and every
+   DataFrame the round persisted is released.
+5. A persisted DataFrame that branches share (``frontier``, ``claimed``,
+   ``fetched``/``docs``, ``chunks``) is materialized before the branches
+   start; otherwise each thread would compute it.
 
 State machine per frontier row (reference complete/abandon/dead-letter
 semantics, servicebus_client.py:191-264 + exceptions.py taxonomy):
@@ -14,12 +45,15 @@ pending → in_flight → done | done_skipped | pending(attempts+1) | dead.
 
 Every merge is idempotent on its key, and the claim is a pure function of
 committed frontier state — so a crash anywhere mid-round replays to the
-identical result (tests/test_resume.py). The final frontier merge of a round
-carries the round's metrics + touched-bucket lineage in its snapshot summary
-(north rule's per-partition lineage + fetch/dedup/emit metrics).
+identical result (tests/test_ordering.py). The frontier commit of a round
+carries the round's metrics, its touched-bucket lineage and each branch's
+wall seconds (``branch_s``) in its snapshot summary.
 """
 
 from __future__ import annotations
+
+import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -46,6 +80,7 @@ from azure_blob_crawler_spark.operators.seen import (
     rebuild_overgrown_shards,
 )
 from azure_blob_crawler_spark.operators.search_index import TextSearchIndex
+from azure_blob_crawler_spark.parallel import run_all
 from azure_blob_crawler_spark.sources.store import SnapshotStore
 from azure_blob_crawler_spark.sources.synthetic import make_fetch_udf
 
@@ -194,11 +229,30 @@ class CrawlRunner:
         return {"round": 0, "next_seq": 0}
 
     def run_round(self) -> dict:
+        """One BSP round (the DAG in the module docstring). Returns the
+        frontier commit summary plus ``done`` (nothing left to claim) and
+        ``round_s`` (the round's wall seconds)."""
+        t0 = time.perf_counter()
+        cached: list[DataFrame] = []
+
+        def keep(df: DataFrame) -> DataFrame:
+            """Persist ``df`` until the round ends (also when it fails)."""
+            cached.append(df.persist())
+            return df
+
+        try:
+            out = self._round(keep)
+        finally:
+            for df in cached:
+                df.unpersist()
+        return {**out, "round_s": round(time.perf_counter() - t0, 3)}
+
+    def _round(self, keep: Callable[[DataFrame], DataFrame]) -> dict:
         # persist the reconciled frontier snapshot for the round: it feeds
-        # the claim, the seen-set anti-join and the commit, and with a
-        # merge-on-read table its lineage (multi-gen union + newest-wins)
-        # should execute once, not once per action
-        frontier = self.store.read(FRONTIER).persist()
+        # the claim and the seen-set anti-join, and with a merge-on-read
+        # table its lineage (multi-gen union + newest-wins) should execute
+        # once, not once per action; the claim below materializes it
+        frontier = keep(self.store.read(FRONTIER))
         robots = self.store.read("robots")
         prev = self._last_commit_summary()
         rnd = int(prev.get("round", 0)) + 1
@@ -210,19 +264,29 @@ class CrawlRunner:
         ):
             self._hot_widths = hot_host_widths(frontier)
             self._widths_drift = 0
-        claimed = claim_round(
+        claimed = keep(claim_round(
             frontier, robots, self.round_size, self.round_seconds, self.default_delay,
             hot_hosts=self._hot_widths,
-        ).persist()
+        ))
         n_claimed = claimed.count()
         if n_claimed == 0:
-            claimed.unpersist()
-            frontier.unpersist()
             return {"round": rnd, "claimed": 0, "done": True}
 
-        # 1. lock: pending → in_flight (crash before the final commit replays)
+        branch_s: dict[str, float] = {}
+
+        def fetch_and_process():
+            fetched, docs = self._fetch_docs(claimed, n_claimed, keep)
+            out = run_all(self.spark, {
+                "pipeline": lambda: self._pipeline(docs, rnd, branch_s),
+                "discovery": lambda: self._discover(docs, frontier, next_seq, keep),
+                "counts": lambda: self._outcome_counts(fetched),
+            }, branch_s)
+            return fetched, out
+
+        branches = {"fetch": fetch_and_process}
         if self.lock_rounds:
-            self.store.merge(
+            # pending → in_flight (a crash before the frontier commit replays)
+            branches["lock"] = lambda: self.store.merge(
                 FRONTIER,
                 claimed.select(
                     "url_hash", "url", "host", "depth", "discovery_seq",
@@ -230,46 +294,98 @@ class CrawlRunner:
                 ),
                 summary={"round": rnd, "phase": "claim", "claimed": n_claimed},
             )
-
-        # 2. claim log (ordering oracle surface)
         if self.log_claims:
-            log_rows = claimed.select(
-                F.lit(rnd).alias("round"),
-                F.col("claim_rank").alias("rank"),
-                "url",
-                (F.lit(int(rnd)).cast("long") * F.lit(100_000_000).cast("long")
-                 + F.col("claim_rank").cast("long")).alias("log_key"),
+            branches["claim_log"] = lambda: self._merge_or_create(
+                CLAIM_LOG, self._claim_log_rows(claimed, rnd), key="log_key"
             )
-            self._merge_or_create(CLAIM_LOG, log_rows, key="log_key")
+        fetched, out = run_all(self.spark, branches, branch_s)["fetch"]
+        n_chunks = out["pipeline"]
+        n_new, new_rows = out["discovery"]
+        n_skipped, n_failed = out["counts"]
 
-        # 3. fetch + admission (size gate BEFORE extraction UDFs); fetch
-        # failures follow the reference's abandon path (attempts+1, state
-        # back to pending, dead-letter at MAX_ATTEMPTS —
-        # servicebus_processor.py:243-250, deploy-infrastructure.ps1:257).
+        # frontier commit: done states + failure redeliveries + discovered
+        # rows + metrics
+        new_attempts = F.when(~F.col("ok"), F.col("attempts") + 1).otherwise(F.col("attempts"))
+        done_states = fetched.withColumn(
+            "state",
+            F.when(
+                ~F.col("ok"),
+                F.when(F.col("attempts") + 1 >= config.MAX_ATTEMPTS, F.lit("dead")).otherwise(
+                    F.lit("pending")
+                ),
+            )
+            .when(F.col("size") > MAX_BYTES, F.lit("done_skipped"))
+            .otherwise(F.lit("done")),
+        ).select(
+            "url_hash", "url", "host", "depth", "discovery_seq", "state",
+            new_attempts.alias("attempts"),
+        )
+        summary = self.store.merge(
+            FRONTIER,
+            done_states.unionByName(new_rows),
+            summary={
+                "round": rnd,
+                "phase": "commit",
+                "claimed": n_claimed,
+                "fetched": n_claimed - n_skipped - n_failed,
+                "skipped": n_skipped,
+                "failed": n_failed,
+                "new_links": n_new,
+                "emitted_chunks": n_chunks,
+                "next_seq": next_seq + n_new,
+                "branch_s": dict(sorted(branch_s.items())),
+            },
+        )
+        # drift for the width cache: new pending rows this round (failed
+        # redeliveries also return to pending — count them too)
+        self._widths_drift += n_new + n_failed
+        return {**summary, "done": False}
+
+    @staticmethod
+    def _claim_log_rows(claimed: DataFrame, rnd: int) -> DataFrame:
+        return claimed.select(
+            F.lit(rnd).alias("round"),
+            F.col("claim_rank").alias("rank"),
+            "url",
+            (F.lit(int(rnd)).cast("long") * F.lit(100_000_000).cast("long")
+             + F.col("claim_rank").cast("long")).alias("log_key"),
+        )
+
+    def _fetch_docs(
+        self, claimed: DataFrame, n_claimed: int, keep: Callable[[DataFrame], DataFrame]
+    ) -> tuple[DataFrame, DataFrame]:
+        """Fetch + admission (size gate BEFORE extraction UDFs) + span
+        extraction; returns (fetched, docs), both persisted and materialized.
+
+        Fetch failures follow the reference's abandon path (attempts+1,
+        state back to pending, dead-letter at MAX_ATTEMPTS —
+        servicebus_processor.py:243-250, deploy-infrastructure.ps1:257)."""
         # The claim's global orderBy+limit collapses to ONE partition — spread
         # the round across the cluster before any per-document UDF runs, or
         # the whole fetch/extract/chunk/embed pipeline executes on one task.
         par = self.spark.sparkContext.defaultParallelism
         work = claimed.repartition(par, "url_hash") if n_claimed > par else claimed
-        fetched = work.withColumn("__f", self._fetch("url", "depth", "attempts")).select(
+        fetched = keep(work.withColumn("__f", self._fetch("url", "depth", "attempts")).select(
             "*",
             F.col("__f.content").alias("content"),
             F.col("__f.size").alias("size"),
             F.col("__f.ok").alias("ok"),
-        ).drop("__f").persist()
+        ).drop("__f"))
         admitted = fetched.filter(F.col("ok") & (F.col("size") <= MAX_BYTES))
-        skipped = fetched.filter(F.col("ok") & (F.col("size") > MAX_BYTES))
-        failed = fetched.filter(~F.col("ok"))
-
-        # 4. extract spans → pages/full_content → chunk → embed
-        docs = (
+        docs = keep(
             admitted.withColumn("spans", self._extract("url", "content", "size"))
             .withColumn("pages", pages_of(F.col("spans")))
             .withColumn("full_content", full_content_of(F.col("spans")))
             .withColumn("use_pages", is_paged_doc(F.col("spans")))
             .withColumn("doc_id", F.regexp_replace("url", "[^A-Za-z0-9_-]", "_"))
-            .persist()
         )
+        # one pass fills both caches (a noop write: no count aggregate job)
+        docs.write.format("noop").mode("overwrite").save()
+        return fetched, docs
+
+    def _pipeline(self, docs: DataFrame, rnd: int, branch_s: dict[str, float]) -> int:
+        """chunk → embed, then the chunks, search-index and doc_meta commits
+        side by side. Returns the round's chunk count."""
         nonempty = docs.filter(F.trim("full_content") != "")
         chunks = (
             nonempty.select(
@@ -285,36 +401,50 @@ class CrawlRunner:
             .withColumn("vector", self._embed(truncate_for_embedding(F.col("content_chunk"))))
             .select("chunk_id", "doc_id", "url", "chunk_index",
                     F.col("content_chunk").alias("content"), "n_tokens", "vector")
-        ).persist()  # consumed by the chunks MERGE and the doc_meta rollup
-        n_chunks = chunks.count()
-        if self.store.exists(CHUNKS):
-            self.store.merge(CHUNKS, chunks)
-        elif n_chunks:
-            self.store.create(CHUNKS, chunks, key="chunk_id", n_buckets=self.n_buckets)
-        # search-index upsert rides the same commit point as the chunks MERGE
-        # (reference: every processed document is upserted into the Azure
-        # Search index, search_client.py:70-121); a crash before the frontier
-        # commit replays the round and re-MERGEs the same keys idempotently
-        if self.maintain_text_index and n_chunks:
-            self.search_index.update(chunks, approx_rows=n_chunks)
+        ).persist()  # consumed by all three commits below
+        try:
+            n_chunks = chunks.count()
 
-        # 5. doc metadata (document_processor.py:327-336 analogue)
-        meta = (
-            nonempty.select("doc_id", "url", "depth")
-            .join(
-                chunks.groupBy("doc_id").agg(
-                    F.sum("n_tokens").alias("total_tokens"),
-                    F.count("*").alias("chunk_count"),
-                ),
-                "doc_id",
-                "left",
+            def commit_chunks():
+                if self.store.exists(CHUNKS):
+                    self.store.merge(CHUNKS, chunks)
+                elif n_chunks:
+                    self.store.create(CHUNKS, chunks, key="chunk_id", n_buckets=self.n_buckets)
+
+            # doc metadata (document_processor.py:327-336 analogue)
+            meta = (
+                nonempty.select("doc_id", "url", "depth")
+                .join(
+                    chunks.groupBy("doc_id").agg(
+                        F.sum("n_tokens").alias("total_tokens"),
+                        F.count("*").alias("chunk_count"),
+                    ),
+                    "doc_id",
+                    "left",
+                )
+                .withColumn("processed_round", F.lit(rnd))
             )
-            .withColumn("processed_round", F.lit(rnd))
-        )
-        self._merge_or_create(DOC_META, meta, key="doc_id")
-        chunks.unpersist()
+            commits = {
+                "chunks": commit_chunks,
+                "doc_meta": lambda: self._merge_or_create(DOC_META, meta, key="doc_id"),
+            }
+            # search-index upsert rides the chunks commit point (reference:
+            # every processed document is upserted into the Azure Search
+            # index, search_client.py:70-121); a crash before the frontier
+            # commit replays the round and re-MERGEs the same keys
+            if self.maintain_text_index and n_chunks:
+                commits["index"] = lambda: self.search_index.update(chunks, approx_rows=n_chunks)
+            run_all(self.spark, commits, branch_s)
+        finally:
+            chunks.unpersist()
+        return n_chunks
 
-        # 6. discovery: links → canonical → batch-dedup → unseen → new frontier rows
+    def _discover(
+        self, docs: DataFrame, frontier: DataFrame, next_seq: int,
+        keep: Callable[[DataFrame], DataFrame],
+    ) -> tuple[int, DataFrame]:
+        """links → canonical → batch-dedup → unseen → new frontier rows, and
+        the seen_cuckoo commit. Returns (new link count, new frontier rows)."""
         links = extract_links(
             docs.select("url", "depth", "claim_rank", "full_content")
         ).select(
@@ -331,7 +461,7 @@ class CrawlRunner:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        fresh = self._filter_unseen(batch_unique, frontier).persist()
+        fresh = keep(self._filter_unseen(batch_unique, frontier))
         n_new = fresh.count()
         # global numbering without an unbounded single-partition window:
         # small rounds rank in one task (bound proven by the count just
@@ -349,7 +479,7 @@ class CrawlRunner:
             F.lit("pending").alias("state"), F.lit(0).alias("attempts"),
         )
 
-        # 6b. maintain the cuckoo seen-set BEFORE the frontier commit so the
+        # maintain the cuckoo seen-set BEFORE the frontier commit so the
         # invariant cuckoo ⊇ frontier survives a crash between the two
         # commits (a cuckoo false positive only costs an exact check; a
         # frontier key missing from the cuckoo would be a correctness bug)
@@ -365,7 +495,8 @@ class CrawlRunner:
             # frontier). Shard ids share the frontier table's bucket
             # transform, so the authoritative read prunes to exactly the
             # overgrown buckets instead of scanning the frontier
-            # (round-3 verdict item 5).
+            # (round-3 verdict item 5). The lock may commit concurrently:
+            # it changes states only, so either snapshot has the same keys.
             def _keys_for(over: list[int]):
                 cur = self.store.read_buckets(FRONTIER, over)
                 new = new_rows.select("url_hash")
@@ -377,54 +508,16 @@ class CrawlRunner:
                 updated, _keys_for, n_store_buckets=self.n_buckets
             )
             self._merge_or_create(SEEN_CUCKOO, updated, key="bucket")
+        return n_new, new_rows
 
-        # 7. final frontier commit: done states + failure redeliveries +
-        # discovered rows + metrics
-        new_attempts = F.when(~F.col("ok"), F.col("attempts") + 1).otherwise(F.col("attempts"))
-        done_states = fetched.withColumn(
-            "state",
-            F.when(
-                ~F.col("ok"),
-                F.when(F.col("attempts") + 1 >= config.MAX_ATTEMPTS, F.lit("dead")).otherwise(
-                    F.lit("pending")
-                ),
-            )
-            .when(F.col("size") > MAX_BYTES, F.lit("done_skipped"))
-            .otherwise(F.lit("done")),
-        ).select(
-            "url_hash", "url", "host", "depth", "discovery_seq", "state",
-            new_attempts.alias("attempts"),
-        )
-        # one aggregate job for both outcome counts (not two .count() jobs)
+    @staticmethod
+    def _outcome_counts(fetched: DataFrame) -> tuple[int, int]:
+        """(skipped, failed) in one aggregate job, not two ``.count()``s."""
         counts = fetched.agg(
             F.sum(F.when(F.col("ok") & (F.col("size") > MAX_BYTES), 1).otherwise(0)).alias("s"),
             F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("f"),
         ).collect()[0]
-        n_skipped, n_failed = int(counts["s"] or 0), int(counts["f"] or 0)
-        summary = self.store.merge(
-            FRONTIER,
-            done_states.unionByName(new_rows),
-            summary={
-                "round": rnd,
-                "phase": "commit",
-                "claimed": n_claimed,
-                "fetched": n_claimed - n_skipped - n_failed,
-                "skipped": n_skipped,
-                "failed": n_failed,
-                "new_links": n_new,
-                "emitted_chunks": n_chunks,
-                "next_seq": next_seq + n_new,
-            },
-        )
-        claimed.unpersist()
-        fetched.unpersist()
-        docs.unpersist()
-        fresh.unpersist()
-        frontier.unpersist()
-        # drift for the width cache: new pending rows this round (failed
-        # redeliveries also return to pending — count them too)
-        self._widths_drift += n_new + n_failed
-        return {**summary, "done": False}
+        return int(counts["s"] or 0), int(counts["f"] or 0)
 
     def _filter_unseen(self, candidates: DataFrame, frontier: DataFrame) -> DataFrame:
         """Seen-set dedup: cuckoo-shard probe prefilter (O(1) memory per
@@ -444,12 +537,14 @@ class CrawlRunner:
 
     def _merge_or_create(self, name: str, df: DataFrame, key: str) -> int:
         df = df.persist()
-        n = df.count()
-        if self.store.exists(name):
-            self.store.merge(name, df)
-        elif n:
-            self.store.create(name, df, key=key, n_buckets=self.n_buckets)
-        df.unpersist()
+        try:
+            n = df.count()
+            if self.store.exists(name):
+                self.store.merge(name, df)
+            elif n:
+                self.store.create(name, df, key=key, n_buckets=self.n_buckets)
+        finally:
+            df.unpersist()
         return n
 
     def run(self, max_rounds: int = 1000) -> list[dict]:

@@ -20,7 +20,9 @@ touching operator code:
   in the same commit, bounding read amplification;
 - a snapshot = JSON manifest {version → bucket → [data paths], summary};
   commits are atomic via write-temp + ``os.replace`` of the CURRENT pointer
-  (single-writer: the Spark driver, exactly like an Iceberg catalog commit);
+  (one writer per table; different tables commit concurrently — each
+  table's lock is held from its manifest read to its commit, exactly like
+  an Iceberg catalog's per-table commit);
 - readers always see the last committed snapshot; a crash mid-write leaves
   only orphan data dirs (GC'able), never a torn table.
 
@@ -33,9 +35,11 @@ what makes crash-replay safe here.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -54,11 +58,31 @@ DEFAULT_COMPACT_FILES = 4
 MOR_MIN_TABLE_BYTES = 64 * 1024 * 1024
 
 
+def _one_writer(method):
+    """Run a table-writing method under its table's lock (``name`` is the
+    method's first argument): a second writer of the same table would read
+    the same version, write into the same ``data/v<n>`` directory and
+    overwrite the first writer's commit."""
+
+    @functools.wraps(method)
+    def locked(self, name: str, *args, **kwargs):
+        with self._writer_lock(name):
+            return method(self, name, *args, **kwargs)
+
+    return locked
+
+
 class SnapshotStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
+        self._locks: dict[str, threading.Lock] = {}
+        self._locks_guard = threading.Lock()
+
+    def _writer_lock(self, name: str) -> threading.Lock:
+        with self._locks_guard:
+            return self._locks.setdefault(name, threading.Lock())
 
     # --- paths/manifests ---------------------------------------------------
 
@@ -196,6 +220,7 @@ class SnapshotStore:
 
     # --- public API ----------------------------------------------------------
 
+    @_one_writer
     def create(
         self,
         name: str,
@@ -273,6 +298,7 @@ class SnapshotStore:
                         total += os.path.getsize(fp)
         return total
 
+    @_one_writer
     def merge(
         self,
         name: str,
@@ -405,6 +431,7 @@ class SnapshotStore:
         finally:
             up.unpersist()
 
+    @_one_writer
     def rewrite_buckets(
         self, name: str, buckets, df: DataFrame, summary: dict | None = None
     ) -> dict:
@@ -441,6 +468,7 @@ class SnapshotStore:
         )
         return commit_summary
 
+    @_one_writer
     def set_summary(self, name: str, summary: dict) -> dict:
         """Metadata-only commit: a new manifest version carrying the same
         data file lists with a replaced summary (e.g. an index clearing its
@@ -450,6 +478,7 @@ class SnapshotStore:
                             "summary": dict(summary)})
         return dict(summary)
 
+    @_one_writer
     def compact(self, name: str, summary: dict | None = None) -> dict:
         """Explicit full compaction: rewrite every multi-file bucket as one
         reconciled file (Iceberg ``rewrite_data_files`` parity)."""
@@ -489,11 +518,13 @@ class SnapshotStore:
             bucket_by=m.get("bucket_by"),
         )
 
+    @_one_writer
     def rollback(self, name: str, version: int) -> None:
         m = self._manifest(name, version)
         m = dict(m, version=self.current_version(name) + 1, summary={"rollback_to": version})
         self._commit(name, m)
 
+    @_one_writer
     def expire_snapshots(self, name: str, keep_last: int = 2) -> dict:
         """Iceberg ``expireSnapshots`` parity (and the reference's
         delete-after-processing GC, document_processor.py:344-358): drop all

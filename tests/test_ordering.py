@@ -180,7 +180,17 @@ def test_metrics_lineage_in_snapshots(engine_runner):
     commits = [h["summary"] for h in hist if h["summary"].get("phase") == "commit"]
     assert commits, "no round commits recorded"
     for s in commits:
-        assert {"claimed", "fetched", "new_links", "emitted_chunks", "touched_buckets"} <= set(s)
+        assert {
+            "round", "phase", "claimed", "fetched", "skipped", "failed", "new_links",
+            "emitted_chunks", "next_seq", "touched_buckets", "mode", "branch_s",
+        } <= set(s)
+        # every branch the DAG runs with the runner's defaults is timed; the
+        # index upsert runs only for a round that emitted chunks
+        branches = {"lock", "claim_log", "pipeline", "chunks", "doc_meta", "discovery"}
+        if s["emitted_chunks"]:
+            branches.add("index")
+        assert branches <= set(s["branch_s"])
+        assert all(t >= 0 for t in s["branch_s"].values())
 
 
 def test_resume_equals_uninterrupted(spark, tmp_path, sim_result):
@@ -214,3 +224,63 @@ def test_resume_equals_uninterrupted(spark, tmp_path, sim_result):
     runner2.run(max_rounds=100)
     assert runner2.claim_log() == sim_result.claim_log
     assert runner2.seen_set() == sim_result.seen
+
+
+CRASH_SEEDS = 10  # 5 rounds; round 2 writes every table below
+
+
+def _cached_rdd_ids(spark) -> list[int]:
+    """Ids of the cached RDDs in ``getRDDStorageInfo()`` except local
+    checkpoints, which the JVM's garbage collector releases, not the round."""
+    jsc = spark.sparkContext._jsc
+    local = {k for k, v in jsc.getPersistentRDDs().items() if v.rdd().isLocallyCheckpointed()}
+    return sorted(i.id() for i in jsc.sc().getRDDStorageInfo() if i.id() not in local)
+
+
+@pytest.mark.parametrize(
+    "table", ["claim_log", "chunks", "search_postings", "doc_meta", "seen_cuckoo"]
+)
+def test_crash_at_branch_commit_replays(spark, tmp_path, monkeypatch, table):
+    """A round whose branch commit fails re-raises after every branch has
+    settled, writes no frontier commit, releases everything it persisted,
+    and a fresh runner's recovery replays to the simulator's result."""
+    seeds = synthetic.seed_frontier_py(CRASH_SEEDS)
+    robots = {r["host"]: r["crawl_delay_s"] for r in synthetic.robots_rows()}
+    sim = simulate([e["url"] for e in seeds], robots, round_size=ROUND_SIZE)
+    root = str(tmp_path / "crash")
+    runner = CrawlRunner(spark, root, round_size=ROUND_SIZE, n_buckets=8)
+    runner.init_frontier(
+        spark.createDataFrame(
+            [(e["url"], e["depth"], e["discovery_seq"]) for e in seeds],
+            "url string, depth int, discovery_seq long",
+        ),
+        synthetic.robots_df(spark),
+    )
+    runner.run_round()  # round 1 committed
+
+    real_commit = runner.store._commit
+    armed = [True]
+
+    def commit_once_failing(name, manifest):
+        if name == table and armed:
+            armed.clear()
+            raise RuntimeError(f"injected crash at the {name} commit")
+        return real_commit(name, manifest)
+
+    monkeypatch.setattr(runner.store, "_commit", commit_once_failing)
+    cached_before = _cached_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        runner.run_round()
+    assert not armed, "the injected commit was never reached"
+    commits = [
+        h["summary"]["round"] for h in runner.store.history("frontier")
+        if h["summary"].get("phase") == "commit"
+    ]
+    assert commits == [1]
+    assert _cached_rdd_ids(spark) == cached_before
+
+    runner2 = CrawlRunner(spark, root, round_size=ROUND_SIZE, n_buckets=8)
+    assert runner2.recover() == ROUND_SIZE
+    runner2.run(max_rounds=100)
+    assert runner2.claim_log() == sim.claim_log
+    assert runner2.seen_set() == sim.seen

@@ -202,3 +202,37 @@ def test_read_buckets_prunes_scan(spark, tmp_path):
         got = sorted((r["k"], r["v"]) for r in one.collect())
         assert got == want and got
     assert st.read_buckets("t", [99]) is None
+
+
+def test_concurrent_merges_into_one_table_both_land(spark, tmp_path):
+    """Two driver threads MERGE disjoint keys into one table at once: the
+    per-table writer lock serializes them into two versions, so neither
+    writer overwrites the other's data directory or commit."""
+    import threading
+
+    st = make_store(spark, tmp_path)
+    st.create("t", base_df(spark), key="k", n_buckets=8)
+    start = threading.Barrier(2)
+    errors = []
+
+    def writer(k):
+        row = spark.range(k, k + 1).select(
+            F.col("id").alias("k"), F.lit(-1).alias("v"), F.lit("new").alias("s")
+        )
+        start.wait()
+        try:
+            st.merge("t", row)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(k,)) for k in (1000, 2000)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert st.current_version("t") == 3
+    got = st.read("t")
+    assert got.count() == 102
+    assert {r["k"] for r in got.filter(F.col("s") == "new").collect()} == {1000, 2000}

@@ -60,6 +60,7 @@ def main() -> None:
         json.dumps(
             {
                 "rounds": len(metrics),
+                "round_s": [m["round_s"] for m in metrics],
                 "last": metrics[-1] if metrics else None,
                 "chunks": runner.store.read("chunks").count(),
                 "frontier": runner.store.read("frontier").count(),
