@@ -815,7 +815,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         composing the legs directly (the engine changes; the oracle is
         fingerprint-frozen and was already the declared semantics)."""
         from azure_blob_crawler_spark.operators.search_index import TextSearchIndex
-        from azure_blob_crawler_spark.operators.sequence import assign_global_seq
         from azure_blob_crawler_spark.sources.store import SnapshotStore
 
         docs = T(spark, d, "documents").select(
@@ -835,21 +834,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("vec_id").cast("string").alias("chunk_id"),
             cosine(F.col("embedding"), qvc).alias("score"),
         )
-        order = [F.round(F.col("score"), 4).desc(), F.asc("chunk_id")]
         t = tscore.select("chunk_id", "score").localCheckpoint(eager=True)
         v = vscore.select("chunk_id", "score").localCheckpoint(eager=True)
-        tr = assign_global_seq(
-            t, order, "rank_text", bounded_rows=t.count(), input_materialized=True
-        ).select("chunk_id", "rank_text")
-        vr = assign_global_seq(
-            v, order, "rank_vec", bounded_rows=v.count(), input_materialized=True
-        ).select("chunk_id", "rank_vec")
-        rrf_k = config.RRF_K
-        fused = tr.join(vr, "chunk_id", "full_outer").withColumn(
-            "score",
-            F.coalesce(1.0 / (F.lit(rrf_k) + F.col("rank_text")), F.lit(0.0))
-            + F.coalesce(1.0 / (F.lit(rrf_k) + F.col("rank_vec")), F.lit(0.0)),
-        )
+        fused = Q.rrf_fuse(t, v, rank_rounding=4)
         return (
             fused.select("chunk_id", F.round("score", 6).alias("score"))
             .orderBy(F.desc("score"), F.asc("chunk_id"))

@@ -26,6 +26,7 @@ from azure_blob_crawler_spark.functions.embedding import embed_query
 from azure_blob_crawler_spark.functions.text import TOKEN_PATTERN
 from azure_blob_crawler_spark.functions.vectors import cosine
 from azure_blob_crawler_spark.operators.sequence import assign_global_seq
+from azure_blob_crawler_spark.parallel import fan_out
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -35,77 +36,38 @@ def _tokens(col):
     return F.regexp_extract_all(F.lower(col), F.lit(TOKEN_PATTERN), 0)
 
 
-def bm25_scores(
-    chunks: DataFrame,
-    query: str,
-    content_col: str = "content",
-    id_col: str = "chunk_id",
-    manage_cache: bool = True,
-) -> DataFrame:
-    """(id, score) for every chunk containing ≥1 query term — the full BM25
-    score set, no top-k (its exact DuckDB twin backs the q_bm25_search
-    oracle; reference scoring surface: search_client.py:351-374).
+def tokenize(df: DataFrame, id_col: str = "chunk_id", content_col: str = "content") -> DataFrame:
+    """(chunk_id, __ts): each row's token array — the one tokenizer of the
+    scan tier and the index build. The input is projected to its two
+    columns before ``fan_out``, so a single-row-group scan tokenizes wide
+    while a shuffled or cached input keeps the caller's partitioning."""
+    narrow = df.select(F.col(id_col).alias("chunk_id"), F.col(content_col).alias("__content"))
+    return fan_out(narrow).select("chunk_id", _tokens(F.col("__content")).alias("__ts"))
 
-    Scale shape: one groupBy(id) over exploded postings of the *query terms
-    only* (the term filter prunes before the shuffle), then a broadcast join
-    of per-term document frequencies.
 
-    Cache discipline (round-1 advice): the per-query (id, tokens)
-    projection is cached for the stats + postings passes and released
-    (blocking) before return; the matching-rows postings set is the only
-    materialized remnant (an eager localCheckpoint both downstream
-    consumers read), so repeated queries in a long-lived session don't
-    accumulate cached corpus partitions. ``manage_cache=True`` additionally
-    fans out a scan-shaped corpus (cached callers own their
-    partitioning)."""
-    q_terms = [t for t in _py_tokens(query)]
-    if not q_terms:
-        return chunks.select(id_col).limit(0).withColumn("score", F.lit(0.0))
-    from azure_blob_crawler_spark.parallel import fan_out
-
-    if manage_cache:
-        # fan_out: a single-row-group corpus file otherwise tokenizes on one
-        # task (manage_cache callers pass a scan-shaped corpus; cached
-        # callers own their partitioning)
-        chunks = fan_out(chunks)
-    # tokenize ONCE into a cached (id, tokens) projection: the stats pass
-    # and the postings pass both read it, so the tokenizer runs exactly
-    # once per query (r5 ran it three times: count-adjacent avg pass,
-    # size() and explode())
-    tokd = chunks.select(
-        F.col(id_col).alias(id_col), _tokens(F.col(content_col)).alias("__ts")
-    ).persist()
-    # ONE stats pass (count + avg token length in the same job; the
-    # arithmetic of each aggregate is unchanged) instead of the former
-    # count() + avg() pair — guide §1.2: fewer passes first
-    stats = tokd.agg(
-        F.count(F.lit(1)).alias("n"), F.avg(F.size("__ts")).alias("a")
-    ).collect()[0]
-    n_docs = int(stats["n"])
-    avg_len = stats["a"] or 1.0
-    terms_lit = F.array(*[F.lit(t) for t in set(q_terms)])
-    # prune to the query's terms INSIDE the array and explode only the
-    # survivors: the Generate feeds ~|matches| rows downstream instead of
-    # |all tokens| (identical semantics — a doc with no matching term
-    # vanishes either way, doc_len is the full token count)
-    postings = (
-        tokd.select(
-            id_col,
-            F.size("__ts").alias("doc_len"),
-            F.explode(F.filter("__ts", lambda t: F.array_contains(terms_lit, t))).alias(
-                "term"
-            ),
-        )
-        .groupBy(id_col, "term", "doc_len")
-        .agg(F.count("*").alias("tf"))
-        # materialize the (tiny) postings set once: df-by-term and scoring
-        # both read it, which previously re-tokenized the corpus per branch
-        .localCheckpoint(eager=True)
+def postings(toks: DataFrame, terms: list[str] | None = None) -> DataFrame:
+    """(term, chunk_id, doc_len, tf) from ``tokenize`` output. ``terms``
+    keeps only those terms, pruned inside the token array so the explode
+    emits ~|matches| rows instead of |all tokens|; a chunk holding none of
+    them has no row, and doc_len is always the full token count."""
+    ts = F.col("__ts")
+    if terms is not None:
+        keep = F.array(*[F.lit(t) for t in sorted(set(terms))])
+        ts = F.filter(ts, lambda t: F.array_contains(keep, t))
+    return (
+        toks.select("chunk_id", F.size("__ts").alias("doc_len"), F.explode(ts).alias("term"))
+        .groupBy("term", "chunk_id", "doc_len")
+        .agg(F.count(F.lit(1)).alias("tf"))
     )
-    # blocking: the token cache must be gone before the caller's next
-    # query, not whenever the async unpersist lands (cache-discipline test)
-    tokd.unpersist(blocking=True)
-    df_by_term = postings.groupBy("term").agg(F.countDistinct(id_col).alias("df"))
+
+
+def bm25(post: DataFrame, n_docs: int, avg_len: float) -> DataFrame:
+    """(chunk_id, score): the BM25 scorer both serving tiers share, over a
+    postings set of the query's terms and the corpus statistics
+    (reference scoring surface: search_client.py:351-374). Per-term
+    document frequency is a tree-aggregated groupBy (no hot window task
+    for stop-word-grade terms), broadcast back onto the postings."""
+    df_by_term = post.groupBy("term").agg(F.countDistinct("chunk_id").alias("df"))
     idf = F.log(
         (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
@@ -114,11 +76,55 @@ def bm25_scores(
         + BM25_K1 * (1 - BM25_B + BM25_B * F.col("doc_len") / F.lit(float(avg_len)))
     )
     return (
-        postings.join(F.broadcast(df_by_term), "term")
+        post.join(F.broadcast(df_by_term), "term")
         .withColumn("term_score", idf * tf_norm)
-        .groupBy(id_col)
+        .groupBy("chunk_id")
         .agg(F.sum("term_score").alias("score"))
     )
+
+
+def bm25_scores(
+    chunks: DataFrame,
+    query: str,
+    content_col: str = "content",
+    id_col: str = "chunk_id",
+) -> DataFrame:
+    """(id, score) for every chunk containing ≥1 query term — the full BM25
+    score set, no top-k (its exact DuckDB twin backs the q_bm25_search
+    oracle). The scan tier: tokenize the corpus, then the shared
+    ``postings`` + ``bm25`` kernel.
+
+    Cache discipline: the token projection is persisted for the stats and
+    postings passes only and released (blocking) before return; the
+    query-term postings set is the one materialized remnant (an eager
+    localCheckpoint), so repeated queries in a long-lived session don't
+    accumulate cached corpus partitions."""
+    q_terms = _py_tokens(query)
+    if not q_terms:
+        return chunks.select(id_col).limit(0).withColumn("score", F.lit(0.0))
+    toks = tokenize(chunks, id_col, content_col).persist()
+    # one stats job: count + avg token length
+    stats = toks.agg(
+        F.count(F.lit(1)).alias("n"), F.avg(F.size("__ts")).alias("a")
+    ).collect()[0]
+    # df-by-term and scoring both read the postings: materialize them once
+    post = postings(toks, q_terms).localCheckpoint(eager=True)
+    # blocking: the token cache must be gone before the caller's next
+    # query, not whenever the async unpersist lands
+    toks.unpersist(blocking=True)
+    return bm25(post, int(stats["n"]), stats["a"] or 1.0).withColumnRenamed(
+        "chunk_id", id_col
+    )
+
+
+def _text_scores(
+    chunks: DataFrame, query: str, content_col: str, id_col: str, index
+) -> DataFrame:
+    """(id, score) BM25 set from the persistent index when one is given,
+    else from a scan of ``chunks``."""
+    if index is None:
+        return bm25_scores(chunks, query, content_col, id_col)
+    return index.bm25(query).withColumnRenamed("chunk_id", id_col)
 
 
 def text_search(
@@ -127,7 +133,6 @@ def text_search(
     top: int | None = config.DEFAULT_TOP,
     content_col: str = "content",
     id_col: str = "chunk_id",
-    _caller_cached: bool = False,
     index=None,
 ) -> DataFrame:
     """BM25 top-k over the chunk corpus with full chunk columns + ``score``.
@@ -136,26 +141,14 @@ def text_search(
     ``index`` (a TextSearchIndex) serves the scores from the persistent
     postings+stats tables instead of tokenizing the corpus — the 100-TB
     serving path; ``chunks`` is then only the projection source for the
-    result join. Cache discipline: the corpus is persisted for the scoring
-    passes and released once the small (id, score) set is materialized; the
-    final projection join replays the corpus lineage exactly once.
-    ``_caller_cached=True`` means the caller owns the persist lifecycle
-    (hybrid_search does)."""
-    if index is not None:
-        scored = index.bm25(query)
-        if id_col != "chunk_id":
-            scored = scored.withColumnRenamed("chunk_id", id_col)
-    else:
-        if not _caller_cached:
-            chunks = chunks.persist()
-        scored = bm25_scores(chunks, query, content_col, id_col, manage_cache=False)
+    result join. The small (id, score) set is materialized before the
+    final projection join, which replays the corpus lineage exactly once."""
+    scored = _text_scores(chunks, query, content_col, id_col, index)
     if top is not None:
         scored = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(
             min(top, config.MAX_TOP)
         )
     top_k = scored.localCheckpoint(eager=True)
-    if index is None and not _caller_cached:
-        chunks.unpersist()
     out = chunks.join(F.broadcast(top_k), id_col, "inner")
     return out.orderBy(F.desc("score"), F.asc(id_col))
 
@@ -187,6 +180,44 @@ def vector_search(
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(min(top, config.MAX_TOP))
 
 
+def rrf_fuse(
+    t: DataFrame,
+    v: DataFrame,
+    id_col: str = "chunk_id",
+    rrf_k: int = config.RRF_K,
+    rank_rounding: int | None = None,
+    pool: int | None = None,
+) -> DataFrame:
+    """(id, score) reciprocal-rank fusion of two materialized (id, score)
+    legs: each leg is ranked by (score desc, id asc), then a full outer
+    join scores Σ 1/(k + rank), so an id ranked by either leg scores.
+    ``rank_rounding`` ranks on round(score, n) so rank order is
+    reproducible across engines/arithmetic orders (ties then break on id).
+    ``pool`` bounds each leg's row count; ``None`` counts the leg, so a
+    small leg takes assign_global_seq's constant-partition window and a
+    big one its two-phase path — the ranks are identical either way."""
+    rank_key = (
+        F.round(F.col("score"), rank_rounding) if rank_rounding is not None
+        else F.col("score")
+    )
+    order = [rank_key.desc(), F.asc(id_col)]
+
+    def ranked(leg: DataFrame, rank_col: str) -> DataFrame:
+        return assign_global_seq(
+            leg, order, rank_col,
+            bounded_rows=pool if pool is not None else leg.count(),
+            input_materialized=True,
+        ).select(id_col, rank_col)
+
+    tr = ranked(t, "rank_text")
+    vr = ranked(v, "rank_vec")
+    return tr.join(vr, id_col, "full_outer").withColumn(
+        "score",
+        F.coalesce(1.0 / (F.lit(rrf_k) + F.col("rank_text")), F.lit(0.0))
+        + F.coalesce(1.0 / (F.lit(rrf_k) + F.col("rank_vec")), F.lit(0.0)),
+    )
+
+
 def hybrid_search(
     chunks: DataFrame,
     query_text: str,
@@ -206,29 +237,16 @@ def hybrid_search(
     score = Σ 1/(k + rank)). ``query_vector`` overrides the embedded
     ``query_text`` for the vector leg (app.py:85-94 accepts either);
     ``pool=None`` ranks the full corpus (no leg truncation);
-    ``rank_rounding`` ranks on round(score, n) so rank order is reproducible
-    across engines/arithmetic orders — the determinism knob the DuckDB
-    oracle relies on (ties then break on id in both engines). ``index``
-    routes the text leg through the persistent TextSearchIndex (no corpus
-    tokenization in the plan).
+    ``rank_rounding`` is the determinism knob the DuckDB oracle relies on
+    (``rrf_fuse``). ``index`` routes the text leg through the persistent
+    TextSearchIndex (no corpus tokenization in the plan).
 
-    Cache discipline mirrors ``text_search``: the corpus is persisted for
-    the two ranking legs, the fused ≤top (id, score) set is materialized,
-    the cache is released, and the projection join replays lineage once."""
+    The corpus is persisted for the two ranking legs, the fused ≤top
+    (id, score) set is materialized, the cache is released, and the
+    projection join replays lineage once."""
     chunks = chunks.persist()  # consumed by both rankers + the result join
-    # Leg scores are computed DIRECTLY as (id, score) sets — the former
-    # text_search/vector_search calls joined the scores back onto the full
-    # corpus row and sorted it, only for the rank step to project (id,
-    # score) back out: a wasted broadcast join + sort per leg (r6 plan
-    # audit). Values are unchanged — the same scorer runs on the same
-    # input, and for the index tier the same inner-join-with-chunks
-    # membership is applied (as a semi-join) after the same pool limit.
-    if index is not None:
-        tscore = index.bm25(query_text)
-        if id_col != "chunk_id":
-            tscore = tscore.withColumnRenamed("chunk_id", id_col)
-    else:
-        tscore = bm25_scores(chunks, query_text, content_col, id_col, manage_cache=False)
+    # index tier: membership in chunks applies after the pool limit
+    tscore = _text_scores(chunks, query_text, content_col, id_col, index)
     if pool is not None:
         tscore = tscore.orderBy(F.desc("score"), F.asc(id_col)).limit(
             min(pool, config.MAX_TOP)
@@ -247,38 +265,7 @@ def hybrid_search(
         )
     v = vscore.select(id_col, "score").localCheckpoint(eager=True)
 
-    rank_key = (
-        F.round(F.col("score"), rank_rounding) if rank_rounding is not None
-        else F.col("score")
-    )
-    # global leg ranks via the two-phase sequence operator: the pool=None
-    # (full-corpus, oracle-determinism) configuration no longer funnels the
-    # whole corpus through one window task; pooled legs keep the bounded
-    # single-task sort. The legs are checkpointed above, so a cheap count
-    # turns a small leg (the common case — score sets are ∝ matching docs,
-    # not corpus) into the constant-partition window instead of the
-    # two-phase machinery's extra jobs; a big leg still two-phases with its
-    # input already materialized. The assigned ranks are identical either
-    # way (assign_global_seq contract).
-    order = [rank_key.desc(), F.asc(id_col)]
-    tr = assign_global_seq(
-        t, order, "rank_text",
-        bounded_rows=pool if pool is not None else t.count(),
-        input_materialized=True,
-    ).select(id_col, "rank_text")
-    vr = assign_global_seq(
-        v, order, "rank_vec",
-        bounded_rows=pool if pool is not None else v.count(),
-        input_materialized=True,
-    ).select(id_col, "rank_vec")
-    fused = (
-        tr.join(vr, id_col, "full_outer")
-        .withColumn(
-            "score",
-            F.coalesce(1.0 / (F.lit(rrf_k) + F.col("rank_text")), F.lit(0.0))
-            + F.coalesce(1.0 / (F.lit(rrf_k) + F.col("rank_vec")), F.lit(0.0)),
-        )
-    )
+    fused = rrf_fuse(t, v, id_col, rrf_k, rank_rounding, pool)
     fused_top = (
         fused.select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))

@@ -33,19 +33,21 @@ full-corpus input (round-4 verdict item 3).
 
 Query cost at 100 TB: ∝ postings of the query's terms (bucket-pruned scan),
 plus — only when dirty — a join against the candidate chunks' doc rows.
-Never a corpus scan, never a tokenization pass. The previous serving path
-(operators/query.bm25_scores) tokenized the entire corpus twice per query;
-it remains as the index-free one-shot tier and as the oracle for this one
-(tests pin score equality across update/delete histories).
+Never a corpus scan, never a tokenization pass. Both tiers share one
+kernel in operators/query — ``tokenize`` and ``postings`` build the index
+rows, ``bm25`` scores the served postings — so the index-free one-shot
+tier (``bm25_scores``) scores identically and stays the oracle for this
+one (tests pin score equality across update/delete histories).
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from azure_blob_crawler_spark.functions.text import TOKEN_PATTERN
-from azure_blob_crawler_spark.operators.query import BM25_B, BM25_K1, _py_tokens, _tokens
+from azure_blob_crawler_spark.operators.query import _py_tokens, bm25, postings, tokenize
 from azure_blob_crawler_spark.sources.store import SnapshotStore
 
 
@@ -78,39 +80,40 @@ class TextSearchIndex:
         return self.store.summary(self.docs) if self.exists() else {}
 
     def update(
-        self, chunks: DataFrame, id_col: str = "chunk_id", content_col: str = "content",
-        approx_rows: int | None = None,
+        self, chunks: DataFrame, id_col: str = "chunk_id", content_col: str = "content"
     ) -> dict:
         """Index (or re-index) a delta of chunks. One tokenization pass over
         the DELTA only; postings + docs MERGEs are ∝ the delta like every
-        other crawl-round commit. Returns the docs-table commit summary.
-
-        ``approx_rows``: delta row count when the caller already knows it
-        (the crawl round counts its chunk delta) — lets the tokenizer skip
-        the fan-out for small deltas (parallel.fan_out rows_hint)."""
+        other crawl-round commit. Returns the docs-table commit summary."""
         prev = self._summary()
         gen = int(prev.get("gen", 0)) + 1
-        toks = self._toks(chunks, id_col, content_col, approx_rows).persist()
+        with self._rows(chunks, id_col, content_col, gen) as (doc_rows, post_rows):
+            return self._write_delta(prev, gen, doc_rows, post_rows)
+
+    @contextmanager
+    def _rows(self, chunks: DataFrame, id_col: str, content_col: str, gen: int):
+        """(doc_rows, post_rows) of ``chunks`` at generation ``gen``. The
+        token projection is persisted so both share ONE tokenizer pass, and
+        doc_rows so its stats job and its write share one computation; both
+        are released on exit."""
+        toks = tokenize(chunks, id_col, content_col).persist()
         doc_rows = toks.select(
             "chunk_id", F.size("__ts").alias("doc_len"), F.lit(gen).alias("gen"),
             self._tb_mask_expr().alias("tb_mask"),
         ).persist()
+        post_rows = postings(toks).select(
+            "term", "chunk_id", "tf", "doc_len", F.lit(gen).alias("gen")
+        )
         try:
-            return self._write_delta(prev, gen, toks, doc_rows)
+            yield doc_rows, post_rows
         finally:
             doc_rows.unpersist()
             toks.unpersist()
 
-    def _write_delta(self, prev: dict, gen: int, toks: DataFrame, doc_rows: DataFrame) -> dict:
+    def _write_delta(
+        self, prev: dict, gen: int, doc_rows: DataFrame, post_rows: DataFrame
+    ) -> dict:
         delta_n, delta_sum = self._agg_len(doc_rows)
-
-        post_rows = (
-            toks.select("chunk_id", F.size("__ts").alias("doc_len"), F.explode("__ts").alias("term"))
-            .groupBy("term", "chunk_id", "doc_len")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .withColumn("gen", F.lit(gen))
-            .select("term", "chunk_id", "tf", "doc_len", "gen")
-        )
 
         if not self.exists():
             self.store.create(
@@ -159,50 +162,19 @@ class TextSearchIndex:
         index rebuild via full re-upload); old versions stay time-travelable
         until expire_snapshots."""
         gen = self._next_gen_for_rebuild()
-        toks = self._toks(chunks, id_col, content_col).persist()
-        doc_rows = toks.select(
-            "chunk_id", F.size("__ts").alias("doc_len"), F.lit(gen).alias("gen"),
-            self._tb_mask_expr().alias("tb_mask"),
-        ).persist()
-        n, s = self._agg_len(doc_rows)
-        post_rows = (
-            toks.select("chunk_id", F.size("__ts").alias("doc_len"), F.explode("__ts").alias("term"))
-            .groupBy("term", "chunk_id", "doc_len")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .withColumn("gen", F.lit(gen))
-            .select("term", "chunk_id", "tf", "doc_len", "gen")
-        )
-        summary = {"gen": gen, "n_docs": n, "sum_len": s, "dirty": False,
-                   "dirty_pb": []}
-        self.store.create(
-            self.docs, doc_rows, key="chunk_id", n_buckets=self.n_doc_buckets,
-            summary=summary,
-        )
-        self.store.create(
-            self.postings, post_rows, key=["term", "chunk_id"],
-            n_buckets=self.n_term_buckets, bucket_by="term",
-        )
-        doc_rows.unpersist()
-        toks.unpersist()
+        with self._rows(chunks, id_col, content_col, gen) as (doc_rows, post_rows):
+            n, s = self._agg_len(doc_rows)
+            summary = {"gen": gen, "n_docs": n, "sum_len": s, "dirty": False,
+                       "dirty_pb": []}
+            self.store.create(
+                self.docs, doc_rows, key="chunk_id", n_buckets=self.n_doc_buckets,
+                summary=summary,
+            )
+            self.store.create(
+                self.postings, post_rows, key=["term", "chunk_id"],
+                n_buckets=self.n_term_buckets, bucket_by="term",
+            )
         return summary
-
-    def _toks(
-        self, chunks: DataFrame, id_col: str, content_col: str,
-        approx_rows: int | None = None,
-    ) -> DataFrame:
-        """(chunk_id, __ts) tokenization of the delta — fanned out (a
-        single-row-group delta otherwise tokenizes on one task; no-op when
-        the delta already carries enough partitions or is known-small) and
-        persisted by the caller so doc_rows and post_rows share ONE
-        tokenizer pass."""
-        from azure_blob_crawler_spark.parallel import fan_out
-
-        return fan_out(
-            chunks.select(
-                F.col(id_col).alias("chunk_id"), F.col(content_col).alias("__content")
-            ),
-            rows_hint=approx_rows,
-        ).select("chunk_id", _tokens(F.col("__content")).alias("__ts"))
 
     def _next_gen_for_rebuild(self) -> int:
         return int(self._summary().get("gen", 0)) + 1
@@ -276,8 +248,7 @@ class TextSearchIndex:
 
     def bm25(self, query: str) -> DataFrame:
         """(chunk_id, score) for every chunk matching ≥1 query term — the
-        exact arithmetic of operators/query.bm25_scores served from the
-        stored index: the postings scan touches only the query terms'
+        scan tier's ``bm25`` kernel over the stored postings: the postings scan touches only the query terms'
         buckets, corpus stats come from the snapshot summary, and no text
         column is read anywhere in the plan. On a clean (append-only)
         index this is ONE job over the pruned postings; after a replacing
@@ -322,22 +293,7 @@ class TextSearchIndex:
         else:
             valid = cand
 
-        # per-term document frequency: tree-aggregated groupBy (no single
-        # hot window task for stop-word-grade terms), broadcast back
-        df_by_term = valid.groupBy("term").agg(F.countDistinct("chunk_id").alias("df"))
-        idf = F.log(
-            (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-        )
-        tf_norm = (F.col("tf") * (BM25_K1 + 1)) / (
-            F.col("tf")
-            + BM25_K1 * (1 - BM25_B + BM25_B * F.col("doc_len") / F.lit(float(avg_len)))
-        )
-        return (
-            valid.join(F.broadcast(df_by_term), "term")
-            .withColumn("term_score", idf * tf_norm)
-            .groupBy("chunk_id")
-            .agg(F.sum("term_score").alias("score"))
-        )
+        return bm25(valid, n_docs, avg_len)
 
     # --- helpers -------------------------------------------------------------
 
@@ -411,7 +367,3 @@ class TextSearchIndex:
             .collect()[0]
         )
         return sorted(row["bs"])
-
-
-# re-exported so callers needn't import the low-level tokenizer separately
-__all__ = ["TextSearchIndex", "TOKEN_PATTERN"]

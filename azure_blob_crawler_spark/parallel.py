@@ -20,6 +20,13 @@ at production scale the scan already carries more partitions than cores and
 the call is a no-op, so this is not a local-mode constant: the target
 derives from ``sparkContext.defaultParallelism`` wherever the session runs.
 
+``fan_out`` is for scan input only, and enforces that: when the input plan
+already holds an exchange (a join, aggregation, sort or repartition) or a
+cached relation, the caller owns its partitioning and the input comes back
+unchanged. The check reads the physical plan and runs no job; it precedes
+``df.rdd``, which under adaptive execution would materialize the input's
+shuffle stages just to count partitions.
+
 Only apply it upstream of partition-order-insensitive computation (hashing,
 tokenization, per-row scoring). Do NOT apply it upstream of float
 aggregations whose oracle comparison depends on a stable summation order.
@@ -81,32 +88,39 @@ def run_all(
     return results
 
 
-# fanning a delta below this many rows per target partition costs more in
-# per-task overhead (scheduling, Arrow round-trips) than the parallelism
-# returns — measured on the crawl's per-round index update, where fanning
-# ~150-row deltas into cores×2 partitions cost ~+30% per round
-MIN_ROWS_PER_TASK = 32
+# widening target per core: two round-robin partitions per task slot
+FAN_OUT_PER_CORE = 2
 
 
-def fan_out(df: DataFrame, per_core: int = 2, rows_hint: int | None = None) -> DataFrame:
-    """Round-robin repartition to ``per_core × defaultParallelism`` when the
-    input is under-partitioned; identity otherwise.
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to ``FAN_OUT_PER_CORE × defaultParallelism``
+    when a scan input is under-partitioned; identity otherwise.
 
     The cost when it fires is one exchange of the (narrow — callers project
     first) input; the win is every downstream per-row computation running
-    wide. ``getNumPartitions`` is plan metadata — no job. Callers must pass
-    a scan/base DataFrame (no upstream shuffle), so the RDD conversion never
-    triggers adaptive-stage execution.
-
-    ``rows_hint``: callers that already know the input's row count (e.g. a
-    crawl round's counted chunk delta) pass it so a small delta is NOT
-    fanned — partition count says nothing about row count, and 64 tasks of
-    two rows each is pure overhead. ``None`` (unknown) fans out.
-    """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * per_core
-    if rows_hint is not None and rows_hint < target * MIN_ROWS_PER_TASK:
+    wide. An input whose plan already holds an exchange or a cached
+    relation is returned unchanged without running a job (see the module
+    docstring)."""
+    if _shuffled_or_cached(df):
         return df
+    target = df.sparkSession.sparkContext.defaultParallelism * FAN_OUT_PER_CORE
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def _shuffled_or_cached(df: DataFrame) -> bool:
+    """Whether the physical plan contains an exchange or an in-memory table
+    scan. Walks the plan only: building the adaptive plan runs no job."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if "Exchange" in name or name == "InMemoryTableScan":
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False

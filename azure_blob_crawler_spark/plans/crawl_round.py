@@ -433,7 +433,7 @@ class CrawlRunner:
             # index, search_client.py:70-121); a crash before the frontier
             # commit replays the round and re-MERGEs the same keys
             if self.maintain_text_index and n_chunks:
-                commits["index"] = lambda: self.search_index.update(chunks, approx_rows=n_chunks)
+                commits["index"] = lambda: self.search_index.update(chunks)
             run_all(self.spark, commits, branch_s)
         finally:
             chunks.unpersist()

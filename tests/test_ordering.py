@@ -3,6 +3,7 @@ ordering; final URL-seen sets equal; per-host politeness budget respected;
 resume-from-crash equals uninterrupted run."""
 
 import pytest
+from conftest import _cached_rdd_ids
 from pyspark.sql import functions as F
 
 from azure_blob_crawler_spark import config
@@ -227,14 +228,6 @@ def test_resume_equals_uninterrupted(spark, tmp_path, sim_result):
 
 
 CRASH_SEEDS = 10  # 5 rounds; round 2 writes every table below
-
-
-def _cached_rdd_ids(spark) -> list[int]:
-    """Ids of the cached RDDs in ``getRDDStorageInfo()`` except local
-    checkpoints, which the JVM's garbage collector releases, not the round."""
-    jsc = spark.sparkContext._jsc
-    local = {k for k, v in jsc.getPersistentRDDs().items() if v.rdd().isLocallyCheckpointed()}
-    return sorted(i.id() for i in jsc.sc().getRDDStorageInfo() if i.id() not in local)
 
 
 @pytest.mark.parametrize(

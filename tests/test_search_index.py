@@ -4,8 +4,11 @@ query time (round-3 verdict item 1)."""
 
 import os
 import shutil
+import tempfile
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from azure_blob_crawler_spark.operators.query import bm25_scores
@@ -58,6 +61,40 @@ def test_index_matches_scan_scores(spark, store):
         assert got.keys() == want.keys(), q
         for k in want:
             assert abs(got[k] - want[k]) < 1e-9, (q, k)
+
+
+VOCAB = ["spark", "merge", "shuffle", "fox", ",", "!"]
+ABSENT = "absent zz ?"  # no term of it is in VOCAB
+
+
+@settings(
+    max_examples=10, deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
+)
+@given(
+    docs=st.lists(st.lists(st.sampled_from(VOCAB), max_size=6), min_size=1, max_size=8),
+    words=st.lists(st.sampled_from(VOCAB + ["absent", "zz", "?", "."]), max_size=4),
+)
+def test_index_matches_scan_on_generated_corpora(spark, docs, words):
+    """Both tiers score every generated corpus and query alike: the same key
+    set, scores within 1e-9; a query matching nothing (absent terms,
+    punctuation, the empty string) returns zero rows on both."""
+    corpus = _corpus(spark, [("d%d" % i, " ".join(ws)) for i, ws in enumerate(docs)])
+    root = tempfile.mkdtemp(prefix="bm25_parity_")
+    try:
+        idx = TextSearchIndex(SnapshotStore(spark, root), n_term_buckets=4, n_doc_buckets=4)
+        idx.update(corpus)
+        q = " ".join(words)
+        want = _scores(bm25_scores(corpus, q))
+        got = _scores(idx.bm25(q))
+        assert got.keys() == want.keys(), q
+        for k in want:
+            assert abs(got[k] - want[k]) < 1e-9, (q, k)
+        for empty in (ABSENT, ""):
+            assert bm25_scores(corpus, empty).count() == 0, empty
+            assert idx.bm25(empty).count() == 0, empty
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_incremental_update_and_vanished_terms(spark, store):
